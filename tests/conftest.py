@@ -135,7 +135,23 @@ _SLOW_NODEIDS = {
 }
 
 
+def _named_on_command_line(config) -> set[str]:
+    """Node ids passed as ``path::name`` arguments, relative to rootdir."""
+    ids = set()
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if sep:
+            rel = os.path.relpath(config.invocation_params.dir / path, config.rootpath)
+            ids.add(f"{rel.replace(os.sep, '/')}::{rest}")
+    return ids
+
+
 def pytest_collection_modifyitems(config, items):
+    # A slow test named explicitly (`pytest tests/x.py::test_y`) runs:
+    # only the default selection of whole files/directories drops it.
+    named = _named_on_command_line(config)
     for item in items:
-        if item.nodeid in _SLOW_NODEIDS:
+        if item.nodeid in _SLOW_NODEIDS and not (
+            item.nodeid in named or item.nodeid.split("[")[0] in named
+        ):
             item.add_marker(pytest.mark.slow)

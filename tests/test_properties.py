@@ -254,6 +254,7 @@ def test_queryspec_differential_fuzz(spark, oracle):
     import pandas as pd
 
     from conftest import SF_DIR, normalize
+    from test_sql_quoting import HOSTILE_PATTERNS, HOSTILE_TAGS
     from ts_data_pipeline_spark.plans import queryspec as qs
     from ts_data_pipeline_spark.queries.telemetry import PV_SQL, _pv
 
@@ -281,6 +282,15 @@ def test_queryspec_differential_fuzz(spark, oracle):
             st.tuples(st.sampled_from(["Like", "NotLike"]),
                       st.sampled_from(["9%", "1%", "%3", "%7%", "4_"]))
             .map(lambda t: qs.TagFilter("k", t[0], t[1])),
+            # quotes, backslashes, wildcards, backticks, ${...}, unicode;
+            # list-valued Like/NotLike match any/none of the patterns
+            st.one_of(
+                st.tuples(st.sampled_from(["Equal", "NotEqual"]),
+                          st.sampled_from(HOSTILE_TAGS + ["1"])),
+                st.tuples(st.sampled_from(["Like", "NotLike"]),
+                          st.lists(st.sampled_from(HOSTILE_PATTERNS + ["1%"]),
+                                   min_size=1, max_size=3)),
+            ).map(lambda t: qs.TagFilter("k", t[0], t[1])),
         )
         naggs = st.lists(
             st.tuples(st.sampled_from(params), st.sampled_from(num_aggs)),

@@ -21,6 +21,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ts_data_pipeline_spark.sqltext import sql_str
+
 
 @dataclass
 class Check:
@@ -48,12 +50,12 @@ def in_range(col: str, lo: float, hi: float) -> Check:
 
 
 def in_set(col: str, values: Sequence[str]) -> Check:
-    vals = ", ".join(f"'{v}'" for v in values)
+    vals = ", ".join(sql_str(v) for v in values)
     return Check(f"enum_{col}", f"{col} IS NOT NULL AND {col} NOT IN ({vals})")
 
 
 def matches(col: str, regex: str) -> Check:
-    return Check(f"regex_{col}", f"{col} IS NOT NULL AND NOT ({col} RLIKE '{regex}')")
+    return Check(f"regex_{col}", f"{col} IS NOT NULL AND NOT ({col} RLIKE {sql_str(regex)})")
 
 
 def run_checks(df: DataFrame, checks: Sequence[Check]) -> DataFrame:
@@ -110,7 +112,11 @@ def run_checks(df: DataFrame, checks: Sequence[Check]) -> DataFrame:
 def checks_sql(
     table: str, plain: Sequence[Check], unique_cols: Sequence[str] = ()
 ) -> str:
-    """DuckDB oracle for run_checks over ``table``."""
+    """DuckDB oracle for run_checks over ``table``.
+
+    Reuses each check's Spark-SQL text, so it holds only for checks
+    whose strings contain no ``\\``, ``'`` or ``${`` (the two engines
+    quote those differently)."""
     selects = []
     for c in plain:
         selects.append(

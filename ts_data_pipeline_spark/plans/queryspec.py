@@ -13,10 +13,15 @@ The evaluator compiles a spec into a single DataFrame chain:
       -> groupBy(time_bucket, *tags) -> per-parameter aggregates
       -> spine join + interpolation -> orderBy -> page
 
-Everything is built-in Column expressions (zero Python UDFs); the
-only genuinely custom operator is linear interpolation (A8) — a
-closed form over ignore-nulls last/first window frames, since Spark
-has no builtin (SURVEY §4 custom-work list).
+Every expression is built once, as Spark-SQL text in which each
+caller string (tag keys and values, stream ids, parameter names,
+timestamps, durations, column names) is quoted by
+:mod:`ts_data_pipeline_spark.sqltext`. One ``filter``/``selectExpr``
+parse replaces the 4-15 py4j calls the Column API spends per
+expression. There are zero Python UDFs; the only genuinely custom
+operator is linear interpolation (A8) — a closed form over
+ignore-nulls last/first window frames, since Spark has no builtin
+(SURVEY §4 custom-work list).
 
 Scale notes: the aggregation is a standard partial+final hash agg on
 (bucket, tags) — the natural shuffle key. The interpolation spine is
@@ -28,24 +33,13 @@ group — bounded state per group, no global sort.
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass, field
 from typing import Optional, Sequence, Union
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: Values/identifiers that may be interpolated into Spark-SQL string
-#: expressions verbatim (the r16 batched plan-build path — one parse
-#: round trip per expression instead of 4-8 py4j calls; same resolved
-#: expression tree, same results). Anything outside this whitelist
-#: falls back to the Column-API builders, so exotic parameter names
-#: keep working exactly as before.
-_SQL_SAFE_RE = re.compile(r"^[0-9A-Za-z_ .:+%-]+$")
-
-
-def _sql_safe(s: object) -> bool:
-    return isinstance(s, str) and bool(_SQL_SAFE_RE.match(s))
+from ts_data_pipeline_spark.sqltext import sql_ident, sql_str
 
 # ---------------------------------------------------------------------------
 # Spec dataclasses (one per swagger model)
@@ -76,7 +70,12 @@ EVENT_LEVELS = ("Trace", "Debug", "Information", "Warning", "Error", "Critical")
 
 @dataclass
 class TagFilter:
-    """tagFilter.ts:17-27 — theta predicate on one tag value."""
+    """tagFilter.ts:17-27 — theta predicate on one tag value.
+
+    A list value matches any of its entries: ``Equal`` is IN and
+    ``Like`` an OR of the patterns; ``NotEqual``/``NotLike`` match
+    none of them.
+    """
 
     tag: str
     operator: str  # Equal | NotEqual | Like | NotLike
@@ -149,8 +148,10 @@ class QuerySpec:
 # Evaluator
 # ---------------------------------------------------------------------------
 
-def _agg_column(spec: NumericAggregation, value: Column, ts: Column) -> tuple[str, Column]:
-    """One named aggregate column per (parameter, aggregation).
+def _agg_column_sql(
+    parameter: str, agg: str, name: str, pcol: str, vcol: str, tcol: str
+) -> str:
+    """One named aggregate per (parameter, aggregation).
 
     The long->wide pivot is conditional aggregation: rows of other
     parameters contribute NULL, which every aggregate ignores —
@@ -158,77 +159,8 @@ def _agg_column(spec: NumericAggregation, value: Column, ts: Column) -> tuple[st
     First/Last use min_by/max_by on event-time (deterministic given
     unique (stream, ts)).
     """
-    name = f"{spec.parameter}_{spec.aggregation.lower()}"
-    agg = spec.aggregation
-    if agg == "Mean":
-        col = F.round(F.avg(value), 4)
-    elif agg == "Max":
-        col = F.max(value)
-    elif agg == "Min":
-        col = F.min(value)
-    elif agg == "First":
-        col = F.min_by(value, F.when(value.isNotNull(), ts))
-    elif agg == "Last":
-        col = F.max_by(value, F.when(value.isNotNull(), ts))
-    elif agg == "Sum":
-        col = F.round(F.sum(value), 4)
-    elif agg == "Count":
-        col = F.count(value)
-    elif agg == "CountDistinct":
-        # Exact distinct per group: correct at any group width, and
-        # the DuckDB-oracle-checkable form. At 100 TB cardinalities
-        # switch to "ApproxCountDistinct" (HyperLogLog++, one pass,
-        # mergeable sketch state, no per-group distinct expansion) —
-        # engine-specific, so pinned by a relative-error pytest
-        # rather than an oracle row.
-        col = F.count_distinct(value)
-    elif agg == "ApproxCountDistinct":
-        col = F.approx_count_distinct(value)
-    elif agg == "Median":
-        col = F.round(F.median(value), 4)
-    elif agg in ("P90", "P99"):
-        # exact interpolating percentile (same semantics as DuckDB's
-        # quantile_cont); at 100 TB group widths switch to
-        # approx_percentile — the one-pass mergeable sketch — the same
-        # exact/approx split as CountDistinct above.
-        q = 0.90 if agg == "P90" else 0.99
-        col = F.round(F.percentile(value, F.lit(q)), 4)
-    elif agg == "Spread":
-        col = F.round(F.max(value) - F.min(value), 4)
-    else:
-        raise ValueError(f"unsupported aggregation {agg!r}")
-    return name, col.alias(name)
-
-
-def _str_agg_column(spec: StringAggregation, value: Column, ts: Column) -> Column:
-    """A5 string/binary aggregate (First/Last/Count only)."""
-    name = f"{spec.parameter}_str_{spec.aggregation.lower()}"
-    agg = spec.aggregation
-    if agg == "First":
-        col = F.min_by(value, F.when(value.isNotNull(), ts))
-    elif agg == "Last":
-        col = F.max_by(value, F.when(value.isNotNull(), ts))
-    elif agg == "Count":
-        col = F.count(value)
-    else:
-        raise ValueError(f"unsupported string aggregation {agg!r}")
-    return col.alias(name)
-
-
-def _agg_column_sql(
-    spec: NumericAggregation, pcol: str, vcol: str, tcol: str
-) -> tuple[str, str]:
-    """SQL-string twin of :func:`_agg_column` (r16 batched build —
-    VERDICT r15 ask #4): one ``F.expr`` parse round trip per
-    aggregate instead of 4-8 py4j Column calls. Mirrors the Column
-    expression tree exactly (same functions, same CASE nesting, same
-    ROUND grain), so the analyzed plan — and therefore the result —
-    is identical. Only reached when every interpolated token passed
-    ``_sql_safe`` (callers fall back to the Column path otherwise)."""
-    v = f"CASE WHEN `{pcol}` = '{spec.parameter}' THEN `{vcol}` END"
-    t = f"CASE WHEN ({v}) IS NOT NULL THEN `{tcol}` END"
-    name = f"{spec.parameter}_{spec.aggregation.lower()}"
-    agg = spec.aggregation
+    v = f"CASE WHEN {sql_ident(pcol)} = {sql_str(parameter)} THEN {sql_ident(vcol)} END"
+    t = f"CASE WHEN ({v}) IS NOT NULL THEN {sql_ident(tcol)} END"
     if agg == "Mean":
         e = f"round(avg({v}), 4)"
     elif agg == "Max":
@@ -244,125 +176,113 @@ def _agg_column_sql(
     elif agg == "Count":
         e = f"count({v})"
     elif agg == "CountDistinct":
+        # Exact distinct per group: correct at any group width, and
+        # the DuckDB-oracle-checkable form. At 100 TB cardinalities
+        # switch to "ApproxCountDistinct" (HyperLogLog++, one pass,
+        # mergeable sketch state, no per-group distinct expansion) —
+        # engine-specific, so pinned by a relative-error pytest
+        # rather than an oracle row.
         e = f"count(DISTINCT {v})"
     elif agg == "ApproxCountDistinct":
         e = f"approx_count_distinct({v})"
     elif agg == "Median":
         e = f"round(median({v}), 4)"
     elif agg in ("P90", "P99"):
+        # exact interpolating percentile (same semantics as DuckDB's
+        # quantile_cont); at 100 TB group widths switch to
+        # approx_percentile — the one-pass mergeable sketch — the same
+        # exact/approx split as CountDistinct above.
         q = "0.90" if agg == "P90" else "0.99"
         e = f"round(percentile({v}, {q}), 4)"
     elif agg == "Spread":
         e = f"round(max({v}) - min({v}), 4)"
     else:
         raise ValueError(f"unsupported aggregation {agg!r}")
-    return name, f"{e} AS `{name}`"
+    return f"{e} AS {sql_ident(name)}"
 
 
-def _str_agg_column_sql(
-    spec: StringAggregation, pcol: str, vcol: str, tcol: str
-) -> str:
-    """SQL-string twin of :func:`_str_agg_column` (same contract as
-    :func:`_agg_column_sql`)."""
-    v = f"CASE WHEN `{pcol}` = '{spec.parameter}' THEN `{vcol}` END"
-    t = f"CASE WHEN ({v}) IS NOT NULL THEN `{tcol}` END"
-    name = f"{spec.parameter}_str_{spec.aggregation.lower()}"
-    agg = spec.aggregation
-    if agg == "First":
-        e = f"min_by({v}, {t})"
-    elif agg == "Last":
-        e = f"max_by({v}, {t})"
-    elif agg == "Count":
-        e = f"count({v})"
+def _in_sql(expr: str, values: Sequence[str]) -> str:
+    if not values:
+        return "false"
+    return f"{expr} IN ({', '.join(sql_str(v) for v in values)})"
+
+
+def _tag_sql(tags_col: str, tag: str) -> str:
+    return f"{sql_ident(tags_col)}[{sql_str(tag)}]"
+
+
+def _tag_predicate_sql_spark(f: TagFilter, tag_sql: str) -> str:
+    """One F6 tag filter (see :class:`TagFilter` for list values)."""
+    many = isinstance(f.value, (list, tuple))
+    if f.operator in ("Equal", "NotEqual"):
+        p = _in_sql(tag_sql, f.value) if many else f"{tag_sql} = {sql_str(f.value)}"
+    elif f.operator in ("Like", "NotLike"):
+        vals = f.value if many else [f.value]
+        p = " OR ".join(f"{tag_sql} LIKE {sql_str(v)}" for v in vals) or "false"
+        if many:
+            p = f"({p})"
     else:
-        raise ValueError(f"unsupported string aggregation {agg!r}")
-    return f"{e} AS `{name}`"
-
-
-def _spec_sql_safe(spec: QuerySpec, *cols: str) -> bool:
-    """True when every token the batched SQL build would interpolate
-    is whitelist-safe (column names, parameter ids, derived aliases).
-    Filters are NOT included here — they batch independently."""
-    return (
-        all(_sql_safe(c) for c in cols)
-        and all(_sql_safe(na.parameter) for na in spec.numeric_aggregations)
-        and all(_sql_safe(sa.parameter) for sa in spec.string_aggregations)
-    )
-
-
-def _tag_predicate_sql_spark(f: TagFilter, tag_sql: str) -> Optional[str]:
-    """Spark-SQL twin of :func:`_tag_predicate`; None when a value is
-    not whitelist-safe (caller falls back to the Column path)."""
-    vals = f.value if isinstance(f.value, (list, tuple)) else [f.value]
-    if not all(_sql_safe(v) for v in vals):
-        return None
-    if f.operator == "Equal":
-        if isinstance(f.value, (list, tuple)):
-            return f"{tag_sql} IN ({', '.join(repr(str(v)) for v in f.value)})"
-        return f"{tag_sql} = '{f.value}'"
-    if f.operator == "NotEqual":
-        if isinstance(f.value, (list, tuple)):
-            return (
-                f"NOT ({tag_sql} IN "
-                f"({', '.join(repr(str(v)) for v in f.value)}))"
-            )
-        return f"NOT ({tag_sql} = '{f.value}')"
-    if f.operator == "Like":
-        return f"{tag_sql} LIKE '{f.value}'"
-    if f.operator == "NotLike":
-        return f"NOT ({tag_sql} LIKE '{f.value}')"
-    raise ValueError(f"unsupported tag operator {f.operator!r}")
+        raise ValueError(f"unsupported tag operator {f.operator!r}")
+    return f"NOT ({p})" if f.operator.startswith("Not") else p
 
 
 def _filters_sql(
-    spec: QuerySpec, stream_col: str, ts_col: str, tags_col: str
-) -> Optional[str]:
-    """All spec filters as ONE Spark-SQL predicate string (a single
-    py4j round trip instead of ~5 per filter). Returns None when any
-    token fails the whitelist — the caller then applies the original
-    per-filter Column predicates. The conjunction is split back into
-    the same individual predicates by the optimizer, so pushdown and
-    results are unchanged. Empty string = no filters."""
-    if not all(_sql_safe(c) for c in (stream_col, ts_col, tags_col)):
-        return None
+    from_ts: Optional[str],
+    to_ts: Optional[str],
+    stream_ids: Optional[Sequence[str]],
+    tag_filters: Sequence[TagFilter],
+    stream_col: str,
+    ts_col: str,
+    tags_col: str,
+    extra: Sequence[str] = (),
+) -> list[str]:
+    """F4 time range (inclusive from, exclusive to — ns-epoch bounds in
+    the contract, ISO strings here), F5 stream ids, ``extra``, then F6
+    tag filters, as Spark-SQL predicates. Callers AND them into one
+    ``filter`` (one py4j round trip); the optimizer splits the
+    conjunction back into the individual pushed predicates."""
     parts: list[str] = []
-    if spec.from_ts is not None:
-        if not _sql_safe(spec.from_ts):
-            return None
-        parts.append(f"`{ts_col}` >= CAST('{spec.from_ts}' AS TIMESTAMP)")
-    if spec.to_ts is not None:
-        if not _sql_safe(spec.to_ts):
-            return None
-        parts.append(f"`{ts_col}` < CAST('{spec.to_ts}' AS TIMESTAMP)")
-    if spec.stream_ids is not None:
-        if not all(_sql_safe(s) for s in spec.stream_ids):
-            return None
-        ids = ", ".join(repr(str(s)) for s in spec.stream_ids)
-        parts.append(f"`{stream_col}` IN ({ids})")
-    for tf in spec.tag_filters:
-        if not _sql_safe(tf.tag):
-            return None
-        p = _tag_predicate_sql_spark(tf, f"`{tags_col}`['{tf.tag}']")
-        if p is None:
-            return None
-        parts.append(p)
-    return " AND ".join(parts)
+    if from_ts is not None:
+        parts.append(f"{sql_ident(ts_col)} >= CAST({sql_str(from_ts)} AS TIMESTAMP)")
+    if to_ts is not None:
+        parts.append(f"{sql_ident(ts_col)} < CAST({sql_str(to_ts)} AS TIMESTAMP)")
+    if stream_ids is not None:
+        parts.append(_in_sql(sql_ident(stream_col), stream_ids))
+    parts.extend(extra)
+    for tf in tag_filters:
+        parts.append(_tag_predicate_sql_spark(tf, _tag_sql(tags_col, tf.tag)))
+    return parts
 
 
-def _tag_predicate(f: TagFilter, tag_value: Column) -> Column:
-    if f.operator == "Equal":
-        if isinstance(f.value, (list, tuple)):
-            return tag_value.isin(*f.value)
-        return tag_value == f.value
-    if f.operator == "NotEqual":
-        if isinstance(f.value, (list, tuple)):
-            return ~tag_value.isin(*f.value)
-        return tag_value != f.value
-    if f.operator == "Like":
-        return tag_value.like(str(f.value))
-    if f.operator == "NotLike":
-        return ~tag_value.like(str(f.value))
-    raise ValueError(f"unsupported tag operator {f.operator!r}")
+def _filter(df: DataFrame, parts: list[str]) -> DataFrame:
+    return df.filter(" AND ".join(parts)) if parts else df
+
+
+def _group_keys(
+    ts_col: str, duration: Optional[str], tags_col: str, tags: Sequence[str]
+) -> tuple[list[str], list[str]]:
+    """Group keys (SQL, output names): time bucket (A7) x tag values (A9).
+
+    The window struct itself is the grouping expression (projecting
+    .start inside the key would hide the event-time window from the
+    streaming watermark checker); bucket = _win.start is selected
+    after the agg by :func:`_unwindow`.
+    """
+    keys, names = [], []
+    if duration is not None:
+        keys.append(f"window({sql_ident(ts_col)}, {sql_str(duration)}) AS _win")
+        names.append("bucket")
+    for t in tags:
+        keys.append(f"{_tag_sql(tags_col, t)} AS {sql_ident(f'tag_{t}')}")
+        names.append(f"tag_{t}")
+    return keys, names
+
+
+def _unwindow(out: DataFrame, cols: list[str]) -> DataFrame:
+    """Project the grouped ``_win`` struct to ``bucket`` (its start)."""
+    return out.selectExpr(
+        "_win.start AS bucket", *[sql_ident(c) for c in cols if c != "bucket"]
+    )
 
 
 def evaluate(
@@ -381,45 +301,19 @@ def evaluate(
     Returns one row per (time bucket x tag group) with one column per
     requested (parameter, aggregation), bucket exposed as ``bucket``.
     """
-    df = parameter_values
-    ts = F.col(ts_col)
-
-    # F4 time range (inclusive from, exclusive to — ns-epoch bounds in
-    # the contract, ISO strings here), F5 stream ids, F6 tag filters
-    # (AND of all). Batched into one SQL predicate when every token is
-    # whitelist-safe (r16 plan-build cost, VERDICT r15 ask #4): the
-    # optimizer splits the conjunction back into the same pushed
-    # predicates, so plan and results are unchanged.
-    fsql = _filters_sql(spec, stream_col, ts_col, tags_col)
-    if fsql is not None:
-        if fsql:
-            df = df.filter(fsql)
-    else:
-        if spec.from_ts is not None:
-            df = df.filter(ts >= F.lit(spec.from_ts).cast("timestamp"))
-        if spec.to_ts is not None:
-            df = df.filter(ts < F.lit(spec.to_ts).cast("timestamp"))
-        if spec.stream_ids is not None:
-            df = df.filter(F.col(stream_col).isin(*spec.stream_ids))
-        for tf in spec.tag_filters:
-            df = df.filter(_tag_predicate(tf, F.col(tags_col)[tf.tag]))
-
-    # Group keys: time bucket (A7) x tag values (A9). The window
-    # struct itself is the grouping expression (projecting .start
-    # inside the key would hide the event-time window from the
-    # streaming watermark checker); bucket = win.start is selected
-    # after the agg.
-    keys: list[Column] = []
-    names: list[str] = []
-    if spec.group_by_time is not None:
-        keys.append(F.window(ts, spec.group_by_time.duration).alias("_win"))
-        names.append("bucket")
-    for t in spec.group_by_tags:
-        keys.append(F.col(tags_col)[t].alias(f"tag_{t}"))
-        names.append(f"tag_{t}")
+    df = _filter(
+        parameter_values,
+        _filters_sql(
+            spec.from_ts, spec.to_ts, spec.stream_ids, spec.tag_filters,
+            stream_col, ts_col, tags_col,
+        ),
+    )
+    gbt = spec.group_by_time
+    keys, names = _group_keys(
+        ts_col, gbt.duration if gbt else None, tags_col, spec.group_by_tags
+    )
 
     # A4 per-parameter aggregates via conditional aggregation.
-    value = F.col(value_col)
     raw_numeric = [na for na in spec.numeric_aggregations if na.aggregation == "None"]
     raw_string = [sa for sa in spec.string_aggregations if sa.aggregation == "None"]
     if raw_numeric or raw_string:
@@ -434,77 +328,64 @@ def evaluate(
             raise ValueError(
                 "'None' (raw passthrough) cannot mix with bucket aggregates"
             )
-        if spec.group_by_time is not None:
+        if gbt is not None:
             raise ValueError("'None' returns raw samples; group_by_time does not apply")
-        params = [na.parameter for na in raw_numeric] + [
-            sa.parameter for sa in raw_string
+        pcol = sql_ident(parameter_col)
+        raws = [(na.parameter, value_col, "none") for na in raw_numeric] + [
+            (sa.parameter, str_value_col, "str_none") for sa in raw_string
         ]
-        out = df.filter(F.col(parameter_col).isin(params)).select(
-            ts.alias("ts"),
-            *[F.col(tags_col)[t].alias(f"tag_{t}") for t in spec.group_by_tags],
+        out = df.filter(_in_sql(pcol, [p for p, _, _ in raws])).selectExpr(
+            f"{sql_ident(ts_col)} AS ts",
+            *keys,
             *[
-                F.when(F.col(parameter_col) == na.parameter, value).alias(
-                    f"{na.parameter}_none"
-                )
-                for na in raw_numeric
-            ],
-            *[
-                F.when(F.col(parameter_col) == sa.parameter, F.col(str_value_col)).alias(
-                    f"{sa.parameter}_str_none"
-                )
-                for sa in raw_string
+                f"CASE WHEN {pcol} = {sql_str(p)} THEN {sql_ident(v)} END"
+                f" AS {sql_ident(f'{p}_{suffix}')}"
+                for p, v, suffix in raws
             ],
         )
         return _order_page(out, spec)
-    aggs = []
-    out_value_cols = []
-    if _spec_sql_safe(spec, parameter_col, value_col, str_value_col, ts_col):
-        # batched build: one F.expr parse per aggregate (r16) — the
-        # SQL twins mirror the Column trees exactly, results identical
-        for na in spec.numeric_aggregations:
-            name, sql = _agg_column_sql(na, parameter_col, value_col, ts_col)
-            aggs.append(F.expr(sql))
-            out_value_cols.append(name)
-        for sa in spec.string_aggregations:
-            aggs.append(
-                F.expr(
-                    _str_agg_column_sql(sa, parameter_col, str_value_col, ts_col)
-                )
+
+    aggs, out_value_cols, str_cols = [], [], []
+    for na in spec.numeric_aggregations:
+        name = f"{na.parameter}_{na.aggregation.lower()}"
+        aggs.append(
+            _agg_column_sql(
+                na.parameter, na.aggregation, name, parameter_col, value_col, ts_col
             )
-    else:
-        for na in spec.numeric_aggregations:
-            cond_value = F.when(F.col(parameter_col) == na.parameter, value)
-            name, col = _agg_column(na, cond_value, ts)
-            aggs.append(col)
-            out_value_cols.append(name)
-        for sa in spec.string_aggregations:
-            cond_value = F.when(
-                F.col(parameter_col) == sa.parameter, F.col(str_value_col)
+        )
+        out_value_cols.append(name)
+    for sa in spec.string_aggregations:
+        # string channels are excluded from numeric interpolation
+        # (interpolationType only applies to numeric series).
+        if sa.aggregation not in ("First", "Last", "Count"):
+            raise ValueError(f"unsupported string aggregation {sa.aggregation!r}")
+        name = f"{sa.parameter}_str_{sa.aggregation.lower()}"
+        aggs.append(
+            _agg_column_sql(
+                sa.parameter, sa.aggregation, name, parameter_col, str_value_col, ts_col
             )
-            aggs.append(_str_agg_column(sa, cond_value, ts))
-            # string channels are excluded from numeric interpolation
-            # (interpolationType only applies to numeric series).
+        )
+        str_cols.append(name)
     if not aggs:
         raise ValueError("QuerySpec requires at least one aggregation")
 
-    out = df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
-    if spec.group_by_time is not None:
-        out = out.select(
-            F.col("_win.start").alias("bucket"),
-            *[n for n in names if n != "bucket"],
-            *out_value_cols,
-            *[f"{sa.parameter}_str_{sa.aggregation.lower()}" for sa in spec.string_aggregations],
-        )
+    agg_cols = [F.expr(a) for a in aggs]
+    out = (
+        df.groupBy(*[F.expr(k) for k in keys]).agg(*agg_cols)
+        if keys
+        else df.agg(*agg_cols)
+    )
+    if gbt is not None:
+        out = _unwindow(out, [*names, *out_value_cols, *str_cols])
 
     # A8 interpolation over the time spine.
-    gbt = spec.group_by_time
     if gbt is not None and gbt.interpolation != "None":
         if spec.from_ts is None or spec.to_ts is None:
             raise ValueError("interpolation requires from_ts and to_ts")
-        spine = _bucket_spine(out, spec, names)
+        group_cols = names[1:]
+        spine = _bucket_spine(out, spec.from_ts, spec.to_ts, gbt.duration, group_cols)
         out = spine.join(out, on=names, how="left")
         if gbt.interpolation in ("Previous", "Linear"):
-            group_cols = [n for n in names if n != "bucket"]
             out = _fill(out, out_value_cols, group_cols, gbt.interpolation)
 
     return _order_page(out, spec)
@@ -515,7 +396,9 @@ def _order_page(out: DataFrame, spec: QuerySpec) -> DataFrame:
     if spec.orderings:
         out = out.orderBy(
             *[
-                F.col(o.by).desc() if o.direction == "Desc" else F.col(o.by).asc()
+                F.expr(sql_ident(o.by)).desc()
+                if o.direction == "Desc"
+                else F.expr(sql_ident(o.by)).asc()
                 for o in spec.orderings
             ]
         )
@@ -548,27 +431,20 @@ def tag_values(
     the tag value — the distinct count of streams rides the same
     shuffle.
     """
-    df = parameter_values
-    ts = F.col(ts_col)
-    if from_ts is not None:
-        df = df.filter(ts >= F.lit(from_ts).cast("timestamp"))
-    if to_ts is not None:
-        df = df.filter(ts < F.lit(to_ts).cast("timestamp"))
-    if stream_ids is not None:
-        df = df.filter(F.col(stream_col).isin(*stream_ids))
-    for tf in tag_filters:
-        df = df.filter(_tag_predicate(tf, F.col(tags_col)[tf.tag]))
+    df = _filter(
+        parameter_values,
+        _filters_sql(
+            from_ts, to_ts, stream_ids, tag_filters, stream_col, ts_col, tags_col
+        ),
+    )
     return (
-        df.select(
-            F.col(tags_col)[tag_key].alias("tag_value"),
-            F.col(stream_col).alias("_sid"),
+        df.selectExpr(
+            f"{_tag_sql(tags_col, tag_key)} AS tag_value",
+            f"{sql_ident(stream_col)} AS _sid",
         )
-        .filter(F.col("tag_value").isNotNull())
+        .filter("tag_value IS NOT NULL")
         .groupBy("tag_value")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count_distinct("_sid").alias("n_streams"),
-        )
+        .agg(F.expr("count(1) AS n_rows"), F.expr("count(DISTINCT _sid) AS n_streams"))
         .orderBy("tag_value")
     )
 
@@ -628,7 +504,7 @@ def interpolate_finals(result: DataFrame, spec: QuerySpec) -> DataFrame:
         return _order_page(result, spec)
     if spec.from_ts is None or spec.to_ts is None:
         raise ValueError("interpolation requires from_ts and to_ts")
-    names = ["bucket"] + [f"tag_{t}" for t in spec.group_by_tags]
+    group_cols = [f"tag_{t}" for t in spec.group_by_tags]
     value_cols = [
         f"{na.parameter}_{na.aggregation.lower()}"
         for na in spec.numeric_aggregations
@@ -640,17 +516,15 @@ def interpolate_finals(result: DataFrame, spec: QuerySpec) -> DataFrame:
     # spine->result a self-join, and a memory-sink-backed finals
     # table cannot deduplicate its attributes there (Conflicting
     # attributes analysis error).
-    spine = _bucket_spine(result, spec, ["bucket"])
-    group_cols = [n for n in names if n != "bucket"]
+    spine = _bucket_spine(result, spec.from_ts, spec.to_ts, gbt.duration, [])
     if group_cols:
-        grp_rel = result.select(*group_cols)
+        grp_rel = result.selectExpr(*[sql_ident(g) for g in group_cols])
         groups = result.sparkSession.createDataFrame(
             grp_rel.distinct().collect(), grp_rel.schema
         )
         spine = spine.crossJoin(groups)
-    out = spine.join(result, on=names, how="left")
+    out = spine.join(result, on=["bucket", *group_cols], how="left")
     if gbt.interpolation in ("Previous", "Linear"):
-        group_cols = [n for n in names if n != "bucket"]
         out = _fill(out, value_cols, group_cols, gbt.interpolation)
     return _order_page(out, spec)
 
@@ -700,35 +574,28 @@ def evaluate_events(
     aggregated string value and occurrence count — the columnar
     ``events{}`` block of the Data response (data.ts:37-40).
     """
-    df = events
-    ts = F.col(ts_col)
-    if spec.from_ts is not None:
-        df = df.filter(ts >= F.lit(spec.from_ts).cast("timestamp"))
-    if spec.to_ts is not None:
-        df = df.filter(ts < F.lit(spec.to_ts).cast("timestamp"))
-    if spec.stream_ids is not None:
-        df = df.filter(F.col(stream_col).isin(*spec.stream_ids))
+    extra = []
     if spec.event_ids is not None:
-        df = df.filter(F.col(event_col).isin(*spec.event_ids))
+        extra.append(_in_sql(sql_ident(event_col), spec.event_ids))
     if spec.include_levels is not None:
-        df = df.filter(F.col(level_col).isin(*spec.include_levels))
+        extra.append(_in_sql(sql_ident(level_col), spec.include_levels))
     if spec.exclude_levels is not None:
-        df = df.filter(~F.col(level_col).isin(*spec.exclude_levels))
-    for tf in spec.tag_filters:
-        df = df.filter(_tag_predicate(tf, F.col(tags_col)[tf.tag]))
+        extra.append(f"NOT ({_in_sql(sql_ident(level_col), spec.exclude_levels)})")
+    df = _filter(
+        events,
+        _filters_sql(
+            spec.from_ts, spec.to_ts, spec.stream_ids, spec.tag_filters,
+            stream_col, ts_col, tags_col, extra,
+        ),
+    )
 
-    keys: list[Column] = [F.col(event_col)]
-    out_keys: list[str] = [event_col]
-    if spec.interval is not None:
-        # Group by the window struct (streaming-watermark-visible),
-        # project bucket afterwards — same reasoning as evaluate().
-        keys.insert(0, F.window(ts, spec.interval).alias("_win"))
-        out_keys.insert(0, "bucket")
-    for t in spec.group_by_tags:
-        keys.append(F.col(tags_col)[t].alias(f"tag_{t}"))
-        out_keys.append(f"tag_{t}")
+    # Group by the window struct (streaming-watermark-visible),
+    # project bucket afterwards — same reasoning as evaluate().
+    keys, names = _group_keys(ts_col, spec.interval, tags_col, spec.group_by_tags)
+    at = 1 if spec.interval is not None else 0
+    keys.insert(at, sql_ident(event_col))
+    names.insert(at, event_col)
 
-    value = F.col(value_col)
     agg = spec.aggregation
     if spec.interpolation == "Linear" and agg != "Count":
         # validated HERE, not inside the interval branch: an
@@ -740,26 +607,22 @@ def evaluate_events(
             f"aggregation (Count); got {agg!r} "
             "whose event values are strings"
         )
-    if agg == "First":
-        val_col = F.min_by(value, F.when(value.isNotNull(), ts)).alias("event_value")
-    elif agg == "Last":
-        val_col = F.max_by(value, F.when(value.isNotNull(), ts)).alias("event_value")
-    elif agg in ("Count", "None"):
-        val_col = None
-    else:
-        raise ValueError(f"unsupported event aggregation {agg!r}")
-    aggs = [F.count(F.lit(1)).alias("event_count")]
+    aggs = ["count(1) AS event_count"]
     val_names = ["event_count"]
-    if val_col is not None:
-        aggs.insert(0, val_col)
-        val_names.insert(0, "event_value")
-    out = df.groupBy(*keys).agg(*aggs)
-    if spec.interval is not None:
-        out = out.select(
-            F.col("_win.start").alias("bucket"),
-            *[k for k in out_keys if k != "bucket"],
-            *val_names,
+    if agg in ("First", "Last"):
+        v = sql_ident(value_col)
+        by = "min_by" if agg == "First" else "max_by"
+        aggs.insert(
+            0,
+            f"{by}({v}, CASE WHEN {v} IS NOT NULL THEN {sql_ident(ts_col)} END)"
+            " AS event_value",
         )
+        val_names.insert(0, "event_value")
+    elif agg not in ("Count", "None"):
+        raise ValueError(f"unsupported event aggregation {agg!r}")
+    out = df.groupBy(*[F.expr(k) for k in keys]).agg(*[F.expr(a) for a in aggs])
+    if spec.interval is not None:
+        out = _unwindow(out, [*names, *val_names])
 
     # A8-on-events: dense bucket spine per event channel. Counts
     # Null-fill to 0 (an absent bucket has zero occurrences);
@@ -767,20 +630,9 @@ def evaluate_events(
     if spec.interval is not None and spec.interpolation != "None":
         if spec.from_ts is None or spec.to_ts is None:
             raise ValueError("interpolation requires from_ts and to_ts")
-        group_cols = [k for k in out_keys if k != "bucket"]
-        spine = out.sparkSession.range(1).select(
-            F.explode(
-                F.expr(
-                    f"sequence(cast('{spec.from_ts}' as timestamp), "
-                    f"cast('{spec.to_ts}' as timestamp) - interval {spec.interval}, "
-                    f"interval {spec.interval})"
-                )
-            ).alias("bucket")
-        )
-        bucket_type = out.schema["bucket"].dataType.simpleString()
-        spine = spine.select(F.col("bucket").cast(bucket_type).alias("bucket"))
-        spine = spine.crossJoin(out.select(*group_cols).distinct())
-        out = spine.join(out, on=["bucket", *group_cols], how="left")
+        group_cols = names[1:]
+        spine = _bucket_spine(out, spec.from_ts, spec.to_ts, spec.interval, group_cols)
+        out = spine.join(out, on=names, how="left")
         if spec.interpolation == "Linear":
             # interpolationType.ts:16 allows Linear on event channels;
             # it is well-defined exactly when the aggregated value
@@ -794,40 +646,32 @@ def evaluate_events(
             out = out.withColumn(
                 "event_count", F.col("event_count").cast("double")
             )
-            out = _fill(out, ["event_count"], group_cols, "Linear")
-            return out
+            return _fill(out, ["event_count"], group_cols, "Linear")
+        if spec.interpolation not in ("Null", "Previous"):
+            raise ValueError(f"unsupported event interpolation {spec.interpolation!r}")
         out = out.withColumn("event_count", F.coalesce("event_count", F.lit(0)))
         if spec.interpolation == "Previous" and "event_value" in out.columns:
-            w_back = (
-                Window.partitionBy(*group_cols)
-                .orderBy("bucket")
-                .rowsBetween(Window.unboundedPreceding, 0)
-            )
-            out = out.withColumn(
-                "event_value",
-                F.last(F.col("event_value"), ignorenulls=True).over(w_back),
-            )
-        elif spec.interpolation not in ("Null", "Previous"):
-            raise ValueError(f"unsupported event interpolation {spec.interpolation!r}")
+            out = _fill(out, ["event_value"], group_cols, "Previous")
     return out
 
 
-def _bucket_spine(out: DataFrame, spec: QuerySpec, names: list[str]) -> DataFrame:
+def _bucket_spine(
+    out: DataFrame, from_ts: str, to_ts: str, duration: str, group_cols: list[str]
+) -> DataFrame:
     """Dense (bucket x tag-group) spine via sequence+explode.
 
     The sequence spans [from, to) at the bucket duration; distinct
     tag groups come from the aggregated result (small). cross-join of
-    two tiny relations — broadcast by the planner.
+    two tiny relations — broadcast by the planner. A malformed
+    duration fails here, at build time, as Spark's
+    INVALID_TYPED_LITERAL.
     """
-    gbt = spec.group_by_time
-    assert gbt is not None
-    dur = gbt.duration
+    dur = f"INTERVAL {sql_str(duration)}"
     spine = out.sparkSession.range(1).select(
         F.explode(
             F.expr(
-                f"sequence(cast('{spec.from_ts}' as timestamp), "
-                f"cast('{spec.to_ts}' as timestamp) - interval {dur}, "
-                f"interval {dur})"
+                f"sequence(CAST({sql_str(from_ts)} AS TIMESTAMP), "
+                f"CAST({sql_str(to_ts)} AS TIMESTAMP) - {dur}, {dur})"
             )
         ).alias("bucket")
     )
@@ -835,9 +679,10 @@ def _bucket_spine(out: DataFrame, spec: QuerySpec, names: list[str]) -> DataFram
     # timestamp flavor (NTZ vs LTZ) so the join key lines up.
     bucket_type = out.schema["bucket"].dataType.simpleString()
     spine = spine.select(F.col("bucket").cast(bucket_type).alias("bucket"))
-    group_cols = [n for n in names if n != "bucket"]
     if group_cols:
-        spine = spine.crossJoin(out.select(*group_cols).distinct())
+        spine = spine.crossJoin(
+            out.selectExpr(*[sql_ident(g) for g in group_cols]).distinct()
+        )
     return spine
 
 
@@ -849,54 +694,19 @@ def _fill(
     Previous: last non-null before the bucket (per tag group).
     Linear: closed-form interpolation between the surrounding
     non-null observations — prev + (next-prev) * elapsed/gap.
+
+    The whole stage is ONE selectExpr, value columns replaced in
+    place (original column order).
     """
-    if all(_sql_safe(c) for c in [*value_cols, *group_cols, *out.columns]):
-        # batched build (r16): the whole fill stage as ONE selectExpr —
-        # the Column spelling costs ~15 py4j round trips per value
-        # column (two window specs, four ignore-nulls lasts, the
-        # closed-form arithmetic). The SQL strings mirror the Column
-        # trees exactly: same window frames, same ignore-nulls lasts,
-        # same ROUND grain, columns replaced in place (original order).
-        part = (
-            f"PARTITION BY {', '.join(f'`{g}`' for g in group_cols)} "
-            if group_cols
-            else "PARTITION BY 1 "
-        )
-        w_back = (
-            f"OVER ({part}ORDER BY `bucket` ASC ROWS BETWEEN "
-            f"UNBOUNDED PRECEDING AND CURRENT ROW)"
-        )
-        w_fwd = (
-            f"OVER ({part}ORDER BY `bucket` DESC ROWS BETWEEN "
-            f"UNBOUNDED PRECEDING AND CURRENT ROW)"
-        )
-        fills: dict[str, str] = {}
-        for c in value_cols:
-            if mode == "Previous":
-                fills[c] = f"last(`{c}`, true) {w_back} AS `{c}`"
-                continue
-            pv = f"last(`{c}`, true) {w_back}"
-            nv = f"last(`{c}`, true) {w_fwd}"
-            pb = (
-                f"last(CASE WHEN `{c}` IS NOT NULL THEN "
-                f"unix_micros(`bucket`) END, true) {w_back}"
-            )
-            nb = (
-                f"last(CASE WHEN `{c}` IS NOT NULL THEN "
-                f"unix_micros(`bucket`) END, true) {w_fwd}"
-            )
-            fills[c] = (
-                f"CASE WHEN `{c}` IS NOT NULL THEN `{c}` "
-                f"WHEN ({pv}) IS NULL OR ({nv}) IS NULL THEN NULL "
-                f"ELSE round(({pv}) + (({nv}) - ({pv})) * "
-                f"CAST(unix_micros(`bucket`) - ({pb}) AS DOUBLE) / "
-                f"CAST(({nb}) - ({pb}) AS DOUBLE), 4) END AS `{c}`"
-            )
-        return out.selectExpr(
-            *[fills.get(c, f"`{c}`") for c in out.columns]
-        )
-    part = Window.partitionBy(*group_cols) if group_cols else Window.partitionBy(F.lit(1))
-    w_back = part.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
+    part = (
+        f"PARTITION BY {', '.join(sql_ident(g) for g in group_cols)} "
+        if group_cols
+        else "PARTITION BY 1 "
+    )
+    w_back = (
+        f"OVER ({part}ORDER BY `bucket` ASC ROWS BETWEEN "
+        f"UNBOUNDED PRECEDING AND CURRENT ROW)"
+    )
     # "Next non-null ahead" over the REVERSED ordering as a running
     # unbounded-PRECEDING frame: the natural `first ignorenulls` over
     # `0..unboundedFollowing` is an UnboundedFollowing frame that
@@ -904,34 +714,34 @@ def _fill(
     # year of 1-minute buckets is 525k rows per group). Same fix as
     # funnel/as-of-forward (operators/tsstats.py, asof.py); costs one
     # extra per-partition sort on the SAME shuffle partitioning.
-    w_fwd = part.orderBy(F.col("bucket").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
+    w_fwd = (
+        f"OVER ({part}ORDER BY `bucket` DESC ROWS BETWEEN "
+        f"UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
-    bucket_us = F.unix_micros(F.col("bucket"))
-    for c in value_cols:
-        v = F.col(c)
+    fills: dict[str, str] = {}
+    for name in value_cols:
+        c = sql_ident(name)
         if mode == "Previous":
-            out = out.withColumn(c, F.last(v, ignorenulls=True).over(w_back))
+            fills[name] = f"last({c}, true) {w_back} AS {c}"
             continue
-        prev_v = F.last(v, ignorenulls=True).over(w_back)
-        next_v = F.last(v, ignorenulls=True).over(w_fwd)
-        prev_b = F.last(F.when(v.isNotNull(), bucket_us), ignorenulls=True).over(w_back)
-        next_b = F.last(F.when(v.isNotNull(), bucket_us), ignorenulls=True).over(w_fwd)
-        interp = (
-            F.when(v.isNotNull(), v)
-            .when(prev_v.isNull() | next_v.isNull(), F.lit(None))
-            .otherwise(
-                F.round(
-                    prev_v
-                    + (next_v - prev_v)
-                    * (bucket_us - prev_b).cast("double")
-                    / (next_b - prev_b).cast("double"),
-                    4,
-                )
-            )
+        pv = f"last({c}, true) {w_back}"
+        nv = f"last({c}, true) {w_fwd}"
+        pb = (
+            f"last(CASE WHEN {c} IS NOT NULL THEN "
+            f"unix_micros(`bucket`) END, true) {w_back}"
         )
-        out = out.withColumn(c, interp)
-    return out
+        nb = (
+            f"last(CASE WHEN {c} IS NOT NULL THEN "
+            f"unix_micros(`bucket`) END, true) {w_fwd}"
+        )
+        fills[name] = (
+            f"CASE WHEN {c} IS NOT NULL THEN {c} "
+            f"WHEN ({pv}) IS NULL OR ({nv}) IS NULL THEN NULL "
+            f"ELSE round(({pv}) + (({nv}) - ({pv})) * "
+            f"CAST(unix_micros(`bucket`) - ({pb}) AS DOUBLE) / "
+            f"CAST(({nb}) - ({pb}) AS DOUBLE), 4) END AS {c}"
+        )
+    return out.selectExpr(*[fills.get(c, sql_ident(c)) for c in out.columns])
 
 
 # ---------------------------------------------------------------------------
@@ -971,20 +781,28 @@ def _sql_lit(v: str) -> str:
     return "'" + str(v).replace("'", "''") + "'"
 
 
+def _q(name: str) -> str:
+    """DuckDB quoted identifier."""
+    return '"' + name.replace('"', '""') + '"'
+
+
 def _tag_predicate_sql(f: TagFilter, col: str) -> str:
-    if f.operator == "Equal":
-        if isinstance(f.value, (list, tuple)):
-            return f"{col} IN ({', '.join(_sql_lit(v) for v in f.value)})"
-        return f"{col} = {_sql_lit(f.value)}"
-    if f.operator == "NotEqual":
-        if isinstance(f.value, (list, tuple)):
-            return f"{col} NOT IN ({', '.join(_sql_lit(v) for v in f.value)})"
-        return f"{col} != {_sql_lit(f.value)}"
-    if f.operator == "Like":
-        return f"{col} LIKE {_sql_lit(f.value)}"
-    if f.operator == "NotLike":
-        return f"{col} NOT LIKE {_sql_lit(f.value)}"
-    raise ValueError(f"unsupported tag operator {f.operator!r}")
+    """DuckDB twin of :func:`_tag_predicate_sql_spark`. ``ESCAPE '\\'``
+    gives LIKE Spark's default escape; DuckDB has none by default."""
+    many = isinstance(f.value, (list, tuple))
+    if f.operator in ("Equal", "NotEqual"):
+        if many:
+            p = f"{col} IN ({', '.join(_sql_lit(v) for v in f.value)})"
+        else:
+            p = f"{col} = {_sql_lit(f.value)}"
+    elif f.operator in ("Like", "NotLike"):
+        vals = f.value if many else [f.value]
+        p = " OR ".join(f"{col} LIKE {_sql_lit(v)} ESCAPE '\\'" for v in vals)
+        if many:
+            p = f"({p})"
+    else:
+        raise ValueError(f"unsupported tag operator {f.operator!r}")
+    return f"NOT ({p})" if f.operator.startswith("Not") else p
 
 
 def _agg_sql(spec: NumericAggregation) -> tuple[str, str]:
@@ -1018,7 +836,7 @@ def _agg_sql(spec: NumericAggregation) -> tuple[str, str]:
         e = f"ROUND(MAX({v}) - MIN({v}), 4)"
     else:
         raise ValueError(f"unsupported aggregation {agg!r}")
-    return name, f"{e} AS {name}"
+    return name, f"{e} AS {_q(name)}"
 
 
 def _str_agg_sql(spec: StringAggregation) -> tuple[str, str]:
@@ -1035,7 +853,7 @@ def _str_agg_sql(spec: StringAggregation) -> tuple[str, str]:
         e = f"COUNT({v})"
     else:
         raise ValueError(f"unsupported string aggregation {agg!r}")
-    return name, f"{e} AS {name}"
+    return name, f"{e} AS {_q(name)}"
 
 
 def oracle_sql(spec: QuerySpec, pv_sql: str) -> str:
@@ -1045,17 +863,17 @@ def oracle_sql(spec: QuerySpec, pv_sql: str) -> str:
     PV_SQL shape)."""
     where = []
     if spec.from_ts is not None:
-        where.append(f"ts >= TIMESTAMP '{spec.from_ts}'")
+        where.append(f"ts >= TIMESTAMP {_sql_lit(spec.from_ts)}")
     if spec.to_ts is not None:
-        where.append(f"ts < TIMESTAMP '{spec.to_ts}'")
+        where.append(f"ts < TIMESTAMP {_sql_lit(spec.to_ts)}")
     if spec.stream_ids is not None:
         ids = ", ".join(_sql_lit(s) for s in spec.stream_ids)
         where.append(f"stream_id IN ({ids})")
     for tf in spec.tag_filters:
-        where.append(_tag_predicate_sql(tf, f"tag_{tf.tag}"))
+        where.append(_tag_predicate_sql(tf, _q(f"tag_{tf.tag}")))
     where_sql = (" WHERE " + " AND ".join(where)) if where else ""
 
-    group_cols = [f"tag_{t}" for t in spec.group_by_tags]
+    group_cols = [_q(f"tag_{t}") for t in spec.group_by_tags]
 
     raw_numeric = [a for a in spec.numeric_aggregations if a.aggregation == "None"]
     raw_string = [a for a in spec.string_aggregations if a.aggregation == "None"]
@@ -1076,11 +894,11 @@ def oracle_sql(spec: QuerySpec, pv_sql: str) -> str:
         psql = ", ".join(_sql_lit(p) for p in params)
         cols = ["ts"] + group_cols + [
             f"CASE WHEN parameter_id = {_sql_lit(a.parameter)}"
-            f" THEN num_value END AS {a.parameter}_none"
+            f" THEN num_value END AS {_q(a.parameter + '_none')}"
             for a in raw_numeric
         ] + [
             f"CASE WHEN parameter_id = {_sql_lit(a.parameter)}"
-            f" THEN str_value END AS {a.parameter}_str_none"
+            f" THEN str_value END AS {_q(a.parameter + '_str_none')}"
             for a in raw_string
         ]
         pred = f"parameter_id IN ({psql})"
@@ -1090,16 +908,17 @@ def oracle_sql(spec: QuerySpec, pv_sql: str) -> str:
         )
         return _order_page_sql(f"WITH pv AS ({pv_sql})\n{body}", spec)
 
-    num_cols, num_exprs = [], []
+    num_names, num_exprs = [], []
     for na in spec.numeric_aggregations:
         n, e = _agg_sql(na)
-        num_cols.append(n)
+        num_names.append(n)
         num_exprs.append(e)
     str_cols, str_exprs = [], []
     for sa in spec.string_aggregations:
         n, e = _str_agg_sql(sa)
-        str_cols.append(n)
+        str_cols.append(_q(n))
         str_exprs.append(e)
+    num_cols = [_q(n) for n in num_names]
     if not (num_exprs or str_exprs):
         raise ValueError("QuerySpec requires at least one aggregation")
 
@@ -1108,7 +927,7 @@ def oracle_sql(spec: QuerySpec, pv_sql: str) -> str:
         dur = spec.group_by_time.duration
         if 86_400_000_000 % _duration_us(dur):
             raise ValueError(f"duration {dur!r} must divide 24h evenly")
-        sel_keys.append(f"time_bucket(INTERVAL '{dur}', ts) AS bucket")
+        sel_keys.append(f"time_bucket(INTERVAL {_sql_lit(dur)}, ts) AS bucket")
     sel_keys += group_cols
     all_exprs = num_exprs + str_exprs
     gb = (
@@ -1131,9 +950,9 @@ def oracle_sql(spec: QuerySpec, pv_sql: str) -> str:
     dur = gbt.duration
     keys = ["bucket"] + group_cols
     spine = (
-        f"SELECT unnest(generate_series(TIMESTAMP '{spec.from_ts}', "
-        f"TIMESTAMP '{spec.to_ts}' - INTERVAL '{dur}', "
-        f"INTERVAL '{dur}')) AS bucket"
+        f"SELECT unnest(generate_series(TIMESTAMP {_sql_lit(spec.from_ts)}, "
+        f"TIMESTAMP {_sql_lit(spec.to_ts)} - INTERVAL {_sql_lit(dur)}, "
+        f"INTERVAL {_sql_lit(dur)})) AS bucket"
     )
     if group_cols:
         spine = (
@@ -1170,32 +989,32 @@ def oracle_sql(spec: QuerySpec, pv_sql: str) -> str:
             spec,
         )
     if gbt.interpolation == "Linear":
-        w_cols = []
-        for c in num_cols:
+        w_cols, fill = [], []
+        for n in num_names:
+            c, pv, nv, pb, nb = (_q(n + s) for s in ("", "_pv", "_nv", "_pb", "_nb"))
             w_cols += [
                 f"last_value({c} IGNORE NULLS) OVER ({part}ORDER BY bucket"
                 f" ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-                f" AS {c}_pv",
+                f" AS {pv}",
                 f"first_value({c} IGNORE NULLS) OVER ({part}ORDER BY bucket"
                 f" ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)"
-                f" AS {c}_nv",
+                f" AS {nv}",
                 f"last_value(CASE WHEN {c} IS NOT NULL THEN epoch_us(bucket)"
                 f" END IGNORE NULLS) OVER ({part}ORDER BY bucket"
                 f" ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-                f" AS {c}_pb",
+                f" AS {pb}",
                 f"first_value(CASE WHEN {c} IS NOT NULL THEN epoch_us(bucket)"
                 f" END IGNORE NULLS) OVER ({part}ORDER BY bucket"
                 f" ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)"
-                f" AS {c}_nb",
+                f" AS {nb}",
             ]
-        fill = [
-            f"CASE WHEN {c} IS NOT NULL THEN {c}"
-            f" WHEN {c}_pv IS NULL OR {c}_nv IS NULL THEN NULL"
-            f" ELSE ROUND({c}_pv + ({c}_nv - {c}_pv) *"
-            f" CAST(epoch_us(bucket) - {c}_pb AS DOUBLE) /"
-            f" CAST({c}_nb - {c}_pb AS DOUBLE), 4) END AS {c}"
-            for c in num_cols
-        ]
+            fill.append(
+                f"CASE WHEN {c} IS NOT NULL THEN {c}"
+                f" WHEN {pv} IS NULL OR {nv} IS NULL THEN NULL"
+                f" ELSE ROUND({pv} + ({nv} - {pv}) *"
+                f" CAST(epoch_us(bucket) - {pb} AS DOUBLE) /"
+                f" CAST({nb} - {pb} AS DOUBLE), 4) END AS {c}"
+            )
         return _order_page_sql(
             base
             + f", w AS (SELECT j.*, {', '.join(w_cols)} FROM j)\n"
@@ -1213,7 +1032,7 @@ def _order_page_sql(sql: str, spec: QuerySpec) -> str:
             raise ValueError("paging requires orderings for determinism")
         return sql
     keys = ", ".join(
-        f"{o.by} {'DESC NULLS LAST' if o.direction == 'Desc' else 'ASC NULLS FIRST'}"
+        f"{_q(o.by)} {'DESC NULLS LAST' if o.direction == 'Desc' else 'ASC NULLS FIRST'}"
         for o in spec.orderings
     )
     sql = f"SELECT * FROM ({sql}) ORDER BY {keys}"
