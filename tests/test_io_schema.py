@@ -88,3 +88,28 @@ def test_schema_memo_roundtrip(spark):
     second = io.load(spark, SF_DIR, "events")         # memoized path
     assert first.schema == second.schema
     assert first.count() == second.count()
+
+
+def test_reader_confs_reset_on_every_load(spark):
+    """A caller that unsets the nanos reader conf between loads must
+    not leave the next load reading ``events`` without it."""
+    io.load(spark, SF_DIR, "events")
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    again = io.load(spark, SF_DIR, "events")
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    assert again.count() > 0
+
+
+def test_schema_memo_sees_rewritten_table(spark, tmp_path):
+    """Rewriting a table in place must not hand back the memoized
+    schema of the old file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = io.table_path(str(tmp_path), "t")
+    pq.write_table(pa.table({"x": [1], "y": [2]}), path)
+    assert io.load(spark, str(tmp_path), "t").columns == ["x", "y"]
+    pq.write_table(pa.table({"x": [1], "y": [2], "z": [3]}), path)
+    again = io.load(spark, str(tmp_path), "t")
+    assert again.columns == ["x", "y", "z"]
+    assert again.collect()[0].z == 3

@@ -203,7 +203,7 @@ def test_salted_sum_matches_plain_groupby(spark):
         for r in salted_sum(
             li,
             ["l_returnflag"],
-            {"qty": F.col("l_quantity").cast("bigint")},
+            {"qty": "CAST(l_quantity AS BIGINT)"},
             salt_buckets=8,
         ).collect()
     }

@@ -34,16 +34,8 @@ def table_path(sf_dir: str, name: str) -> str:
 #: must be added deliberately, not silently misdecoded by 1000x.
 _NANOS_TS_TABLES = frozenset({"events"})
 
-#: path -> inferred StructType (see :func:`load`; metadata only).
-_SCHEMA_CACHE: dict[str, T.StructType] = {}
-
-#: sessions whose reader confs are already set — the two conf.set
-#: calls in :func:`load` are idempotent but cost a py4j round trip
-#: each, ~2x11 per bench build pass (r16). Weak so a stopped session
-#: is dropped (and a new object can never alias a dead one's slot).
-import weakref  # noqa: E402
-
-_CONF_SET: "weakref.WeakSet" = weakref.WeakSet()
+#: path -> (st_mtime_ns, st_size, inferred StructType); see :func:`load`.
+_SCHEMA_CACHE: dict[str, tuple[int, int, T.StructType]] = {}
 
 
 def normalize_timestamps(df: DataFrame, table: str | None = None) -> DataFrame:
@@ -91,10 +83,10 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       instead of erroring; :func:`normalize_timestamps` truncates it
       to micros exactly as DuckDB does.
     """
-    if spark not in _CONF_SET:
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        _CONF_SET.add(spark)
+    # Set on every call (two py4j round trips, ~0.4 ms): a caller may
+    # have changed either conf since the previous load.
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = table_path(sf_dir, name)
     # Schema memo (r15): re-inferring the parquet schema costs a
     # driver-side footer read per load (~90-200 ms warm, measured) —
@@ -102,24 +94,21 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # metadata re-derivation. Cache the INFERRED schema per absolute
     # path (the metastore's job in a deployed engine) and hand it to
     # the reader, which then skips inference. This memoizes METADATA
-    # only — every execution still scans the parquet inputs; the
-    # testdata dirs are immutable for a process lifetime, matching
-    # Spark's own per-session file-index caching assumption.
-    schema = _SCHEMA_CACHE.get(path)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
+    # only — every execution still scans the parquet inputs. The
+    # entry carries the path's mtime and size (one os.stat, ~6 us),
+    # so a table rewritten in place is inferred again. A path the
+    # local filesystem cannot stat (missing, or a Hadoop URI) is
+    # read without the memo, and Spark reports any error.
+    try:
+        st = os.stat(path)
+        stamp = (st.st_mtime_ns, st.st_size)
+    except OSError:
+        stamp = None
+    hit = _SCHEMA_CACHE.get(path)
+    if hit is not None and hit[:2] == stamp:
+        df = spark.read.schema(hit[2]).parquet(path)
     else:
-        df = spark.read.schema(schema).parquet(path)
+        df = spark.read.parquet(path)
+        if stamp is not None:
+            _SCHEMA_CACHE[path] = (*stamp, df.schema)
     return normalize_timestamps(df, table=name)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every synthetic table; keys match DuckDB oracle views."""
-    return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each table as a temp view for spark.sql queries."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

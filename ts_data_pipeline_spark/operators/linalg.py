@@ -85,21 +85,6 @@ GROUP BY i1, j.range
 """
 
 
-def mean_vector(emb: DataFrame, vec_col: str = "embedding",
-                dim: int = 64) -> list[float]:
-    """Column means, one dimension-bounded aggregate (d doubles to
-    the driver — sketch-sized)."""
-    row = emb.agg(
-        *[
-            F.avg(F.element_at(vec_col, j + 1).cast("double")).alias(
-                f"m{j}"
-            )
-            for j in range(dim)
-        ]
-    ).collect()[0]
-    return [row[f"m{j}"] for j in range(dim)]
-
-
 def pca_components(
     emb: DataFrame,
     vec_col: str = "embedding",
@@ -108,7 +93,7 @@ def pca_components(
 ) -> tuple[list[list[float]], list[float], list[float]]:
     """Top-k principal components of the embedding cloud.
 
-    Distributed part: Gram + mean (both dimension-bounded, above).
+    Distributed part: Gram + mean, one dimension-bounded aggregate.
     Driver part: form covariance C = G/N - mean meanT (d x d numpy)
     and eigh it — O(d^3) on a sketch-sized matrix. Components have a
     deterministic sign fix (largest-|loading| coordinate positive) so

@@ -68,35 +68,37 @@ QUALIFY rank <= {top_n}
 
 def salted_sum(
     df: DataFrame,
-    key_cols: list[str],
-    sums: dict[str, Column],
+    key_cols: list[str | Column],
+    sums: dict[str, str],
     *,
     salt_buckets: int = 16,
-    salt_source: str | None = None,
 ) -> DataFrame:
     """Two-phase sum/count aggregation under a salt.
 
-    ``sums`` maps output name -> expression to sum. ``salt_source``
-    is a column whose hash spreads rows (defaults to
-    ``spark_partition_id`` — zero extra column reads, already
-    uniform across input splits).
+    ``sums`` maps output name -> Spark SQL text of the expression to
+    sum. The salt is ``spark_partition_id() % salt_buckets`` — zero
+    extra column reads, already uniform across input splits. Phase 1
+    aggregates on (keys, salt), phase 2 folds the salted partials on
+    the keys. Each phase's aggregates ride ONE ``named_struct``
+    expression, parsed once instead of one py4j round trip per
+    aggregate. Returns the key columns, one column per sum and
+    ``n_rows``; sums are never rounded here, so a caller that rounds
+    does it once, after the final sum.
     """
-    salt = (
-        F.pmod(F.xxhash64(F.col(salt_source)), F.lit(salt_buckets))
-        if salt_source is not None
-        else F.spark_partition_id() % salt_buckets
-    )
+    pparts = ["'_p_cnt', count(1)"]
+    pparts += [f"'_p_{name}', sum({expr})" for name, expr in sums.items()]
     partial = (
-        df.withColumn("_salt", salt)
+        df.withColumn("_salt", F.spark_partition_id() % salt_buckets)
         .groupBy(*key_cols, "_salt")
-        .agg(
-            *[F.sum(expr).alias(f"_p_{name}") for name, expr in sums.items()],
-            F.count(F.lit(1)).alias("_p_cnt"),
-        )
+        .agg(F.expr("named_struct(" + ", ".join(pparts) + ") AS _p"))
     )
-    return partial.groupBy(*key_cols).agg(
-        *[F.sum(f"_p_{name}").alias(name) for name in sums],
-        F.sum("_p_cnt").alias("n_rows"),
+    keys = [c for c in partial.columns if c not in ("_salt", "_p")]
+    fparts = ["'n_rows', sum(_p._p_cnt)"]
+    fparts += [f"'{name}', sum(_p._p_{name})" for name in sums]
+    return (
+        partial.groupBy(*keys)
+        .agg(F.expr("named_struct(" + ", ".join(fparts) + ") AS _s"))
+        .select(*keys, *[f"_s.{name}" for name in sums], "_s.n_rows")
     )
 
 

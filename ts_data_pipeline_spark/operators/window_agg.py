@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ts_data_pipeline_spark.operators import skew
+
 # (prefix, side value, otype value) -> column name stem, mirroring
 # option_trade_aggs/main.py:143-188 accumulator keys.
 _SIDE_NAME = {"buy": "bought", "sell": "sold", "no_side": "no_side"}
@@ -58,7 +60,8 @@ def option_window_agg(
     symbol distributions (a hot symbol at market open funnels into
     one reducer otherwise): phase 1 aggregates on
     (window, osym, salt) spreading each hot key over ``salt_buckets``
-    tasks, phase 2 re-aggregates the tiny salted result. Every
+    tasks, phase 2 re-aggregates the tiny salted result
+    (:func:`~ts_data_pipeline_spark.operators.skew.salted_sum`). Every
     accumulator is a decomposable sum/count, so the two plans are
     value-identical (rounding applied once, after the final sum).
 
@@ -67,91 +70,55 @@ def option_window_agg(
     see streaming/windowed.py).
     """
     win = F.window(F.col("ts"), duration)
-    names = accumulator_names()
 
     # Aggregates are built as SQL strings (one parse round trip per
     # expression) rather than nested Column calls: the Column-API
     # spelling cost ~300 driver round trips (~0.5 s per plan build,
     # profiled — OPTIMIZATION_r15.md §driver). Same resolved
     # expressions, same results.
-    def preds():
-        for stem, whale, side, otype in names:
-            yield stem, (
-                f"whale = {'true' if whale else 'false'} "
-                f"AND side = '{side}' AND otype = '{otype}'"
-            )
+    sums = {}
+    for stem, whale, side, otype in accumulator_names():
+        pred = (
+            f"whale = {'true' if whale else 'false'} "
+            f"AND side = '{side}' AND otype = '{otype}'"
+        )
+        sums[f"{stem}_vol"] = f"CASE WHEN {pred} THEN qty ELSE 0 END"
+        sums[f"{stem}_prem"] = f"CASE WHEN {pred} THEN premium ELSE 0.0 END"
 
-    if salt_buckets is None:
-        # All 51 aggregates ride ONE named_struct expression (r16):
-        # 51 separate F.expr calls cost a py4j round trip each
-        # (~0.1 s of every plan build, measured); the struct parses
-        # once and Catalyst extracts the identical aggregate
-        # expressions, building the struct in the result projection —
-        # partial/final split unchanged (pinned by test_plan_shapes),
-        # output columns re-flattened by the final select. A/B:
-        # build 0.19 -> 0.10 s, end-to-end 0.58 -> 0.44 s, rows
-        # identical (99,921 compared).
-        parts = ["'trade_count', count(1)"]
-        for stem, pred in preds():
-            parts.append(
-                f"'{stem}_vol', sum(CASE WHEN {pred} THEN qty ELSE 0 END)"
-            )
-            parts.append(
-                f"'{stem}_prem', "
-                f"round(sum(CASE WHEN {pred} THEN premium ELSE 0.0 END), 4)"
-            )
-        grouped = trades.groupBy(win, F.col("osym")).agg(
-            F.expr("named_struct(" + ", ".join(parts) + ") AS _s")
+    def rounded(name: str, expr: str) -> str:
+        return f"round({expr}, 4)" if name.endswith("_prem") else expr
+
+    if salt_buckets is not None:
+        grouped = skew.salted_sum(
+            trades, [win, F.col("osym")], sums, salt_buckets=salt_buckets
         )
         return grouped.selectExpr(
             "window.start AS window_start",
             "window.end AS window_end",
             "osym",
-            "_s.trade_count AS trade_count",
-            *[
-                f"_s.{c} AS {c}"
-                for stem, *_ in names
-                for c in (f"{stem}_vol", f"{stem}_prem")
-            ],
+            "n_rows AS trade_count",
+            *[f"{rounded(c, c)} AS {c}" for c in sums],
         )
-    else:
-        # Phase 1: partial sums under a salt (no rounding yet).
-        # spark_partition_id is already uniform across input splits —
-        # zero extra column reads. Same one-struct build as the
-        # unsalted branch (r16).
-        pparts = ["'_p_cnt', count(1)"]
-        for stem, pred in preds():
-            pparts.append(
-                f"'_p_{stem}_vol', sum(CASE WHEN {pred} THEN qty ELSE 0 END)"
-            )
-            pparts.append(
-                f"'_p_{stem}_prem', "
-                f"sum(CASE WHEN {pred} THEN premium ELSE 0.0 END)"
-            )
-        partial = (
-            trades.withColumn("_salt", F.spark_partition_id() % salt_buckets)
-            .groupBy(win, F.col("osym"), F.col("_salt"))
-            .agg(F.expr("named_struct(" + ", ".join(pparts) + ") AS _p"))
-        )
-        # Phase 2: fold the salted partials; round once at the end.
-        fparts = ["'trade_count', sum(_p._p_cnt)"]
-        for stem, _ in preds():
-            fparts.append(f"'{stem}_vol', sum(_p._p_{stem}_vol)")
-            fparts.append(f"'{stem}_prem', round(sum(_p._p_{stem}_prem), 4)")
-        grouped = partial.groupBy("window", "osym").agg(
-            F.expr("named_struct(" + ", ".join(fparts) + ") AS _s")
-        )
-        return grouped.selectExpr(
-            "window.start AS window_start",
-            "window.end AS window_end",
-            "osym",
-            "_s.trade_count AS trade_count",
-            *[
-                f"_s.{c} AS {c}"
-                for stem, *_ in names
-                for c in (f"{stem}_vol", f"{stem}_prem")
-            ],
-        )
+    # All 25 aggregates ride ONE named_struct expression (r16):
+    # separate F.expr calls cost a py4j round trip each (~0.1 s of
+    # every plan build, measured); the struct parses once and
+    # Catalyst extracts the identical aggregate expressions, building
+    # the struct in the result projection — partial/final split
+    # unchanged (pinned by test_plan_shapes), output columns
+    # re-flattened by the final select. A/B: build 0.19 -> 0.10 s,
+    # end-to-end 0.58 -> 0.44 s, rows identical (99,921 compared).
+    parts = ["'trade_count', count(1)"]
+    parts += [f"'{c}', {rounded(c, f'sum({e})')}" for c, e in sums.items()]
+    grouped = trades.groupBy(win, F.col("osym")).agg(
+        F.expr("named_struct(" + ", ".join(parts) + ") AS _s")
+    )
+    return grouped.selectExpr(
+        "window.start AS window_start",
+        "window.end AS window_end",
+        "osym",
+        "_s.trade_count AS trade_count",
+        *[f"_s.{c} AS {c}" for c in sums],
+    )
 
 
 def option_window_agg_sql(trades_sql: str, bucket: str = "minute",

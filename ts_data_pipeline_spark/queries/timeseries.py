@@ -1,8 +1,8 @@
 """Time-series composition queries: as-of join, sessionization,
-pivot, salted skew-resistant aggregation, IVF ANN.
+pivot, range join, rollups, IVF ANN.
 
 These fill the operator classes the guide calls out that Spark lacks
-natively (as-of join) or that only matter at scale (salting), each
+natively (as-of join) or that only matter at scale (range join), each
 expressed as a composition of built-in DataFrame ops — no UDFs.
 """
 
@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ts_data_pipeline_spark import io
-from ts_data_pipeline_spark.operators import asof, rollup, similarity, skew
+from ts_data_pipeline_spark.operators import asof, rollup, similarity
 from ts_data_pipeline_spark.registry import register
 
 IVF_QUERY_IDS = list(range(10))
@@ -139,36 +139,6 @@ SELECT user_id,
        ROUND(SUM(CASE WHEN event_type = 'error' THEN value END), 4) AS error
 FROM events
 GROUP BY user_id
-"""
-
-
-def salted_returnflag_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-resistant sum over the 3-value l_returnflag key."""
-    li = io.load(spark, sf_dir, "lineitem")
-    out = skew.salted_sum(
-        li,
-        ["l_returnflag"],
-        {
-            "sum_qty": F.col("l_quantity"),
-            "revenue": F.col("l_extendedprice") * (1 - F.col("l_discount")),
-        },
-        salt_buckets=16,
-    )
-    return out.select(
-        "l_returnflag",
-        F.col("sum_qty").cast("bigint").alias("sum_qty"),
-        F.round("revenue", 4).alias("revenue"),
-        "n_rows",
-    )
-
-
-SALTED_RETURNFLAG_SQL = """
-SELECT l_returnflag,
-       CAST(SUM(l_quantity) AS BIGINT) AS sum_qty,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS revenue,
-       COUNT(*) AS n_rows
-FROM lineitem
-GROUP BY l_returnflag
 """
 
 
@@ -408,9 +378,8 @@ register(
 register("range_join_whale_windows", range_join_whale_windows, RANGE_JOIN_WHALE_SQL)
 register("session_window_builtin", session_window_builtin, SESSION_WINDOW_BUILTIN_SQL)
 # pivot_event_values -> olap_pivot_suite (queries/suites.py).
-# salted_returnflag_revenue: superseded by flagship_salted (the salt
-# pattern wired into the flagship, queries/flagship.py); the operator
-# stays pinned by tests/test_scale_patterns.py.
+# Salted skew-resistant aggregation: flagship_salted
+# (queries/flagship.py) runs operators/skew.py::salted_sum.
 # ann_ivf_topk -> merged with the LSH variant as ann_lsh_ivf_topk
 # (queries/llmdata.py).
 

@@ -9,13 +9,14 @@ Reproduces the reference's Kafka edges Spark-first:
   headers /root/reference/option_trades/utils.py:187-190).
 - JSON consume path with embedded-``ts`` event-time extraction
   (S7/P14 — /root/reference/option_trade_aggs/main.py:20-29,75-82).
-- sha256 deterministic record key (P11 —
-  /root/reference/darkpool_trades/main.py:88-92).
+- The sha256 deterministic record key (P11) is not built here: it is
+  ``functions/enrich.py::deterministic_key``, which ``darkpool_enrich``
+  projects as its ``key`` column.
 - Avro value serialization against a pinned schema (S6 —
   /root/reference/darkpool_trades/main.py:19-39,51-69; the registry
   fetch is replaced by schemas pinned in code, SURVEY §1.3).
 
-Everything stays JVM-side (``to_json``/``from_json``/``sha2``), so
+Everything stays JVM-side (``to_json``/``from_json``), so
 the encode/decode is whole-stage-codegen'd; at 100 TB the Kafka sink
 parallelism is the upstream partitioning — key-hash distribution
 mirrors the reference's 4-partition keyed topics (T6).
@@ -31,11 +32,6 @@ from pyspark.sql import types as T
 
 #: Kafka sink headers column type: ARRAY<STRUCT<key STRING, value BINARY>>.
 HEADER_TYPE = "array<struct<key:string,value:binary>>"
-
-
-def sha256_record_key(*cols: Column) -> Column:
-    """Deterministic record key: sha256 over concatenated fields (P11)."""
-    return F.sha2(F.concat_ws("", *cols), 256)
 
 
 def to_kafka_json(
